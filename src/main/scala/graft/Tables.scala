@@ -1,19 +1,89 @@
 package graft
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
   *
   * All engine queries take `(spark, sfDir)` and read only these tables, so
   * the driver's DuckDB oracle sees byte-identical inputs. Parquet carries its
-  * own schema (verified against FIXTURES.md §A); the vectorized reader +
-  * Catalyst column pruning / predicate pushdown make these scans the cheap
-  * part of every plan — at 100 TB the same `spark.read.parquet` call simply
-  * fans out over more files/row-groups, so nothing here is local-mode-only.
+  * own schema (verified against FIXTURES.md §A): [[table]] reads it from ONE
+  * footer on the driver and hands it to the reader explicitly, so building a
+  * frame launches no Spark job — Spark's own inference would run a job per
+  * read just to open that same footer. The vectorized reader + Catalyst
+  * column pruning / predicate pushdown make these scans the cheap part of
+  * every plan — at 100 TB the same read simply fans out over more
+  * files/row-groups, and the schema still costs one footer, so nothing here
+  * is local-mode-only.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** The schema Spark's non-merging parquet inference returns for `path`,
+    * resolved on the driver without a Spark job: list the path once, then
+    * read the footer of the file that inference would pick —
+    * `_common_metadata`, else `_metadata`, else the first data file by
+    * path — and convert it under the CALLING session's conf (so the
+    * nanos-as-long child session of [[events]] keeps its encoding). Hidden
+    * files are skipped by the same name rule Spark's file index applies.
+    *
+    * None leaves the read to Spark's own inference, errors included: a
+    * schema-merging session (the union needs every footer), a partitioned
+    * or nested directory (partition columns come from the paths), and a
+    * missing path or one with no data file.
+    */
+  private def footerSchema(spark: SparkSession, path: String)
+      : Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) return None
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val listed =
+      try root.getFileSystem(hadoopConf).listStatus(root)
+      catch { case _: FileNotFoundException => return None }
+    val summaries = Seq(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
+    val visible = listed.filterNot { f =>
+      val n = f.getPath.getName
+      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")) && !summaries.exists(n.startsWith)
+    }
+    val (summary, data) =
+      visible.partition(f => summaries.contains(f.getPath.getName))
+    if (visible.exists(_.isDirectory) || data.isEmpty) return None
+    val picked = summaries.flatMap(n => summary.find(_.getPath.getName == n))
+      .headOption.getOrElse(data.minBy(_.getPath.toString))
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(picked, hadoopConf),
+      HadoopReadOptions.builder(hadoopConf)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    val footer = try reader.getFooter finally reader.close()
+    Some(ParquetFileFormat.readSchemaFromFooter(
+      new Footer(picked.getPath, footer),
+      new ParquetToSparkSchemaConverter(conf)))
+  }
+
+  /** Copy `parent`'s current modifiable conf onto `child` — the setup of
+    * a child session that overrides a few keys for its own queries only.
+    */
+  private[graft] def syncConf(parent: SparkSession, child: SparkSession)
+      : Unit =
+    parent.conf.getAll.foreach { case (k, v) =>
+      if (child.conf.isModifiable(k) && !child.conf.getOption(k).contains(v))
+        child.conf.set(k, v)
+    }
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")
@@ -51,10 +121,7 @@ object Tables {
       if (child == null) { child = s.newSession(); nanosSessions.put(s, child) }
       child
     }
-    s.conf.getAll.foreach { case (k, v) =>
-      if (ns.conf.isModifiable(k) && !ns.conf.getOption(k).contains(v))
-        ns.conf.set(k, v)
-    }
+    syncConf(s, ns)
     ns.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // The fixture's physical `ts` type has changed across driver testdata
     // generations (TIMESTAMP(NANOS) → TIMESTAMP_NTZ), so branch on what the

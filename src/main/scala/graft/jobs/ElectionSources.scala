@@ -3,6 +3,8 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.Tables
+
 /** The reference's eleven inputs behind one interface (SURVEY.md §7.1), so
   * jobs are pure `DataFrame => DataFrame` transforms and tests substitute
   * parquet/in-memory fixtures for the JDBC tables and IEC REST payloads.
@@ -141,11 +143,6 @@ object ElectionSchemas {
       StructField("PRSeats", IntegerType)))))))
 }
 
-/** Parquet/CSV-backed sources for production-shaped runs: dimension CSVs
-  * with explicit schemas (no inference in production paths, SURVEY §1.3)
-  * and parquet fact tables; JSON payload tables as one `body` string per
-  * document, exactly what the HTTP fetch stage produces.
-  */
 /** JDBC-backed sources — the production mapping of the reference's SQL
   * Server reads (SURVEY.md §2.1 S2-S4: `SELECT * FROM <table>` cursors
   * become `spark.read.jdbc` table scans; Catalyst pushes job filters like
@@ -187,13 +184,18 @@ final class JdbcElectionSources(
   def seatResultsJson: DataFrame = ballotResultsJson
 }
 
+/** Parquet/CSV-backed sources for production-shaped runs: dimension CSVs
+  * with explicit schemas (no inference in production paths, SURVEY §1.3)
+  * and parquet fact tables whose schema [[Tables.table]] reads from the
+  * footer without a Spark job; JSON payload tables as one `body` string per
+  * document, exactly what the HTTP fetch stage produces.
+  */
 final class FileElectionSources(spark: SparkSession, dir: String)
     extends ElectionSources {
   import ElectionSchemas._
   private def csv(name: String, schema: StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(s"$dir/$name.csv")
-  private def pq(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private def pq(name: String): DataFrame = Tables.table(spark, dir, name)
   def wards: DataFrame = csv("Wards", ElectionSchemas.wards)
   def munis: DataFrame = csv("Munis", ElectionSchemas.munis)
   def councilWinners: DataFrame = pq("LED_GIS_CouncilWinners")

@@ -15,10 +15,21 @@ import org.apache.spark.sql.types._
   * O(wards) DB round trips → one distributed job.
   *
   * Output row order: the reference's CSV order comes from pandas groupby's
-  * sorted-key iteration (SURVEY §2.7 O3) — every job here ends in an
-  * explicit total orderBy reproducing it deterministically.
+  * sorted-key iteration (SURVEY §2.7 O3) — every job here ends in
+  * [[sortedOutput]], an explicit total sort of its one output partition
+  * reproducing it deterministically.
   */
 object SanefJobs {
+
+  /** A job's final order: one partition sorted by `keys`. Every job's
+    * output is O(10^4) rows bound for one CSV, so a global orderBy's
+    * range-partition sampling job buys nothing — its partitions would be
+    * funneled into [[CsvSink]]'s single task anyway. Here the frame
+    * arrives at the sink as one sorted partition, and the sink's
+    * coalesce(1) is a no-op.
+    */
+  private def sortedOutput(keys: Column*)(df: DataFrame): DataFrame =
+    df.repartition(1).sortWithinPartitions(keys: _*)
 
   /** Reusable anti-join spine (SURVEY §7.2 step 2): wards of the configured
     * delimitation having NO voting district with zero total votes cast —
@@ -32,7 +43,15 @@ object SanefJobs {
     * 4,468-row wards dim is broadcast, so the only wide exchange is on
     * fklWardId.
     */
-  def completedWards(src: ElectionSources, cfg: JobConfig): DataFrame = {
+  def completedWards(src: ElectionSources, cfg: JobConfig): DataFrame =
+    completedSpine(src, cfg).transform(sortedOutput(col("WardID")))
+
+  /** [[completedWards]] unsorted — the form the four spine jobs semi-join
+    * against. The optimizer drops a Sort under a semi-join, but would keep
+    * the single-partition exchange of [[sortedOutput]].
+    */
+  private def completedSpine(src: ElectionSources, cfg: JobConfig)
+      : DataFrame = {
     val unfinished = src.displayVotingDistricts
       .filter(col("fklEEId") === cfg.electoralEventId)
       .groupBy("fklWardId", "fklVotingDistrict")
@@ -46,7 +65,6 @@ object SanefJobs {
       .join(unfinished, Seq("fklWardId"), "left_anti")
       .join(broadcast(src.wards), col("fklWardId") === col("WardID"))
       .select("ProvinceID", "MunicipalityID", "WardID")
-      .orderBy("WardID")
   }
 
   /** Province decode dim (JobConfig.provinceCodes as a broadcast frame —
@@ -74,7 +92,7 @@ object SanefJobs {
   // =====================================================================
   def wardVotesByParty(
       spark: SparkSession, src: ElectionSources, cfg: JobConfig): DataFrame = {
-    val completed = completedWards(src, cfg).select("WardID")
+    val completed = completedSpine(src, cfg).select("WardID")
     src.ballotResultsJson
       .select(from_json(col("body"), ElectionSchemas.ballotResults).as("r"))
       .select(col("r.WardID").as("WardID"),
@@ -84,7 +102,7 @@ object SanefJobs {
         col("WardID").as("Geography"),
         col("p.Name").as("Party"),
         col("p.TotalValidVotes").as("Count"))
-      .orderBy("Geography", "Party")
+      .transform(sortedOutput(col("Geography"), col("Party")))
   }
 
   // =====================================================================
@@ -97,7 +115,7 @@ object SanefJobs {
   // =====================================================================
   def voterTurnout(
       spark: SparkSession, src: ElectionSources, cfg: JobConfig): DataFrame = {
-    val completed = completedWards(src, cfg)
+    val completed = completedSpine(src, cfg)
       .select(col("WardID").as("fklWardID"))
     val perWard = src.vdStats
       .filter(col("pkfklEEID") === cfg.electoralEventId)
@@ -112,7 +130,8 @@ object SanefJobs {
         .as(Seq("Voter Turnout", "Count")))
       .select(col("fklWardID").as("Geography"),
         col("Voter Turnout"), col("Count"))
-      .orderBy(col("Geography"), col("Voter Turnout").desc) // Voted first
+      .transform(sortedOutput(col("Geography"),
+        col("Voter Turnout").desc)) // Voted first
   }
 
   // =====================================================================
@@ -120,7 +139,7 @@ object SanefJobs {
   // =====================================================================
   def wardVotesByCandidate(
       spark: SparkSession, src: ElectionSources, cfg: JobConfig): DataFrame = {
-    val completed = completedWards(src, cfg)
+    val completed = completedSpine(src, cfg)
       .select(col("WardID").as("fklWardId"))
     src.wardCandidates
       .filter(col("fklEEId") === cfg.electoralEventId)
@@ -130,7 +149,7 @@ object SanefJobs {
         concat_ws(" - ", col("sPartyAbbr"), col("sCandidateName"))
           .as("Party"),
         col("lCount").as("Count"))
-      .orderBy("Geography", "Party")
+      .transform(sortedOutput(col("Geography"), col("Party")))
   }
 
   // =====================================================================
@@ -154,7 +173,7 @@ object SanefJobs {
       .select(
         col("c.WardID").as("Geography"),
         concat_ws(" - ", col("c.Name"), col("c.PartyName")).as("Contents"))
-      .orderBy("Geography")
+      .transform(sortedOutput(col("Geography")))
   }
 
   // =====================================================================
@@ -162,7 +181,7 @@ object SanefJobs {
   // =====================================================================
   def prVotesByParty(
       spark: SparkSession, src: ElectionSources, cfg: JobConfig): DataFrame = {
-    val completed = completedWards(src, cfg)
+    val completed = completedSpine(src, cfg)
       .select(col("WardID").as("fklWardId"))
     src.displayWard
       .filter(col("fklEEId") === cfg.electoralEventId)
@@ -171,7 +190,7 @@ object SanefJobs {
         col("sWardGeography").as("Geography"),
         col("sPartyName").as("Party"),
         col("lCount").as("Count"))
-      .orderBy("Geography", "Party")
+      .transform(sortedOutput(col("Geography"), col("Party")))
   }
 
   // =====================================================================
@@ -194,7 +213,7 @@ object SanefJobs {
         .as(Seq("Councils", "Count")))
       .select(col("ProvinceCode").as("Geography"),
         col("Councils"), col("Count"))
-      .orderBy("Geography", "Councils")
+      .transform(sortedOutput(col("Geography"), col("Councils")))
   }
 
   // =====================================================================
@@ -211,7 +230,7 @@ object SanefJobs {
       .agg(count("sPartyName").as("Count"))
       .select(col("ProvinceCode").as("Geography"),
         col("sPartyName").as("Party"), col("Count"))
-      .orderBy("Geography", "Party")
+      .transform(sortedOutput(col("Geography"), col("Party")))
   }
 
   // =====================================================================
@@ -237,7 +256,7 @@ object SanefJobs {
         array_join(array_sort(collect_list(col("li"))), ""),
         lit("</ul>")).as("Contents"))
       .select(col("ProvinceCode").as("Geography"), col("Contents"))
-      .orderBy("Geography")
+      .transform(sortedOutput(col("Geography")))
   }
 
   // =====================================================================
@@ -264,7 +283,8 @@ object SanefJobs {
         .as(Seq("Seat Type", "Count")))
       .select(col("Municipality").as("Geography"), col("Party Name"),
         col("Seat Type"), col("Count"))
-      .orderBy(col("Geography"), col("Party Name"), col("Seat Type").desc)
+      .transform(sortedOutput(col("Geography"), col("Party Name"),
+        col("Seat Type").desc))
   }
 
   // =====================================================================

@@ -13,10 +13,12 @@ import org.apache.spark.sql.DataFrame
 /** Job sinks (SURVEY.md §2.1 S7/S8).
   *
   * CsvSink reproduces the reference's single-CSV materialization
-  * (`upload()` at SANEF_Uploader.py:50-55): coalesce(1) is correct here
-  * because every job's output is O(10^4) rows (§6) — the heavy lifting
-  * happened distributed upstream; only the final tiny frame funnels to one
-  * task. The `<endpoint>.<ddMMyyyy-HHmm>.csv` stamp (:51-52) is applied on
+  * (`upload()` at SANEF_Uploader.py:50-55): one task writes one file. Every
+  * job's output is O(10^4) rows (§6) — the heavy lifting happened
+  * distributed upstream — and SanefJobs already delivers it as one sorted
+  * partition, so coalesce(1) is a no-op for job frames; it still funnels
+  * any other frame (a reset frame, a caller's own) into the single file.
+  * The `<endpoint>.<ddMMyyyy-HHmm>.csv` stamp (:51-52) is applied on
   * rename.
   *
   * HttpUploadSink is the Wazimap multipart POST (:57-64) — pure driver

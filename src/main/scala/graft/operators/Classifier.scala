@@ -161,8 +161,6 @@ object Classifier {
     */
   def train(feats: DataFrame,
             eta: Double = ClsEta, iters: Int = ClsIters): Array[Double] = {
-    val spark = feats.sparkSession
-    val cached = feats.persist()
     var w = Array.fill(NumFeatures)(0.0)
     // r15 NOTE: feeding the weights in as a broadcast one-row local
     // relation (to stabilize the generated source and hit the codegen
@@ -182,9 +180,17 @@ object Classifier {
     //     as its own query-stage JOB — doubling the loop's 16
     //     driver-sequenced sync points, the exact balloon mechanism the
     //     r14/r15 verdicts measured under host load.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = spark.conf.get(aqeKey)
-    spark.conf.set(aqeKey, "false")
+    //
+    // The loop's queries run in a child session (the Tables.events
+    // precedent) that owns the AQE override, so the caller's session
+    // conf is never touched: a query running concurrently on it keeps
+    // AQE, and overlapping train() calls cannot interleave a
+    // save/restore of the shared flag. The features enter the child as
+    // rows and are persisted there.
+    val loop = feats.sparkSession.newSession()
+    graft.Tables.syncConf(feats.sparkSession, loop)
+    loop.conf.set("spark.sql.adaptive.enabled", "false")
+    val cached = loop.createDataFrame(feats.rdd, feats.schema).persist()
     try {
       var n = 0.0
       var iter = 0
@@ -202,10 +208,7 @@ object Classifier {
           round8(w(j) - eta * row.getLong(j) / (n * 1e8)))
         iter += 1
       }
-    } finally {
-      spark.conf.set(aqeKey, aqePrev)
-      cached.unpersist()
-    }
+    } finally cached.unpersist()
     w
   }
 

@@ -582,8 +582,10 @@ object SnapshotStore {
     * supported physical types (signed INT32/INT64, FLOAT, DOUBLE —
     * everything [[statColumns]] classifies, except DECIMAL); integral
     * bounds still widen OUTWARD past 2^53 ([[widenLo]]/[[widenHi]]);
-    * a NaN bound or a stats-less chunk yields NO entry, so the file
-    * is simply never pruned ("stats only ever EXCLUDE"). Any column
+    * a NaN bound, or a chunk without bounds that is not provably
+    * all-null, yields NO entry, so the file is simply never pruned
+    * ("stats only ever EXCLUDE"); a proven all-null chunk contributes
+    * nothing, like the read-back aggregation's min/max. Any column
     * this reader cannot bound soundly (decimal's unscaled encoding)
     * falls back to [[sidecarsForViaJob]] — the r15 one-job read-back —
     * for the whole group set, so the two producers can never mix
@@ -629,8 +631,9 @@ object SnapshotStore {
     * from the footer (decimal, unsigned ints) — the caller must use
     * the Spark read-back path instead. Columns that are simply not
     * stat-eligible (strings, dates, timestamps, nested) are skipped,
-    * mirroring [[statColumns]]; a column whose chunks lack statistics
-    * or whose bounds are NaN records no entry (file never pruned).
+    * mirroring [[statColumns]]; a column with a chunk that lacks
+    * statistics, has NaN bounds, or has its bounds withheld without
+    * being all-null records no entry (file never pruned).
     */
   private def footerStats(
       conf: org.apache.hadoop.conf.Configuration,
@@ -693,8 +696,15 @@ object SnapshotStore {
           val name = c.getPath.toDotString
           classOf.get(name).foreach { integral =>
             val st = c.getStatistics
-            if (st == null) dead += name
-            else if (st.hasNonNullValue) {
+            if (st == null || !st.hasNonNullValue) {
+              // no bounds: the chunk contributes nothing only when it
+              // PROVES it is all-null (as in the read-back min/max); a
+              // null or empty Statistics, or bounds parquet-mr withheld
+              // from a chunk holding NaN next to real doubles, leave
+              // the column unbounded
+              if (st == null || !st.isNumNullsSet ||
+                  st.getNumNulls != c.getValueCount) dead += name
+            } else {
               if (integral) {
                 val mn = st.genericGetMin.asInstanceOf[Number].longValue
                 val mx = st.genericGetMax.asInstanceOf[Number].longValue
@@ -709,7 +719,7 @@ object SnapshotStore {
                   hiD(name) = hiD.get(name).fold(mx)(math.max(_, mx))
                 }
               }
-            } // all-null chunk: contributes nothing, like the agg path
+            }
           }
         }
       }

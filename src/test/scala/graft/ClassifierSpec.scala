@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 import graft.operators.Classifier
 
@@ -57,6 +58,31 @@ class ClassifierSpec extends AnyFunSuite with BeforeAndAfterAll {
     // violations can only push toward drop
     (1 until Classifier.NumFeatures).foreach(j =>
       assert(w(j) <= 0.0, s"w$j = ${w(j)}"))
+  }
+
+  test("train scopes its AQE override to its own queries: the caller's " +
+    "flag is unchanged during and after, and the loop still runs one " +
+    "job per pass") {
+    val key = "spark.sql.adaptive.enabled"
+    val before = spark.conf.get(key)
+    val feats = Classifier.features(Tables.documents(spark, dir))
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val polls = new java.util.concurrent.atomic.AtomicInteger
+    @volatile var training = true
+    val poller = new Thread(() =>
+      while (training) {
+        seen.add(spark.conf.get(key)); polls.incrementAndGet()
+        Thread.sleep(1)
+      })
+    poller.start()
+    val jobs =
+      try JobCount(spark)(Classifier.train(feats))
+      finally { training = false; poller.join() }
+    assert(polls.get > 0)
+    assert(seen.asScala.toSet === Set(before))
+    assert(spark.conf.get(key) === before)
+    // with AQE on, each pass's shuffle would add a query-stage job
+    assert(jobs <= Classifier.ClsIters, s"$jobs jobs")
   }
 
   test("scores are probabilities and pred is the 0.5 threshold") {

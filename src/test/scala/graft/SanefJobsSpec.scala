@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -230,6 +231,53 @@ class SanefJobsSpec extends AnyFunSuite {
       "Geography,Councils,Count",
       "EC,Hung,1", "EC,Outright Majority,1",
       "WC,Hung,0", "WC,Outright Majority,1"))
+  }
+
+  /** Each job's sort keys — the terminal global orderBy each job used
+    * before its output became one sorted partition.
+    */
+  private val sortKeys: Map[String, Seq[Column]] = Map(
+    "completed_wards" -> Seq(col("WardID")),
+    "ward_votes_by_party" -> Seq(col("Geography"), col("Party")),
+    "voter_turnout" -> Seq(col("Geography"), col("Voter Turnout").desc),
+    "ward_votes_by_candidate" -> Seq(col("Geography"), col("Party")),
+    "ward_councillor_elected" -> Seq(col("Geography")),
+    "pr_votes_by_party" -> Seq(col("Geography"), col("Party")),
+    "hung_councils" -> Seq(col("Geography"), col("Councils")),
+    "councils_won_by_party" -> Seq(col("Geography"), col("Party")),
+    "list_of_hung_councils" -> Seq(col("Geography")),
+    "seats_won" ->
+      Seq(col("Geography"), col("Party Name"), col("Seat Type").desc))
+
+  test("every job ends in one sorted partition: no range exchange, and " +
+    "the same CSV as the global orderBy form") {
+    val out = java.nio.file.Files.createTempDirectory("graft-order").toString
+    val jobs = SanefJobs.all.map(s => s.name -> SanefJobs.run(spark, Fx,
+      s.name)) :+ ("completed_wards" -> SanefJobs.completedWards(Fx,
+      JobConfig()))
+    assert(jobs.map(_._1).toSet === sortKeys.keySet)
+    def plan(d: DataFrame): String = d.queryExecution.executedPlan.toString
+    def csv(d: DataFrame, file: String): Seq[String] = {
+      val src = scala.io.Source.fromFile(CsvSink.write(d, out, file).toFile)
+      try src.getLines().toSeq finally src.close()
+    }
+    jobs.foreach { case (name, got) =>
+      // the global orderBy form over the same rows: several partitions,
+      // a range exchange, then CsvSink's coalesce(1)
+      val old = got.repartition(4).orderBy(sortKeys(name): _*)
+      assert(!plan(got).contains("rangepartitioning"), name)
+      // the final sort's exchange is the only one into a single
+      // partition: the spine jobs semi-join against the unsorted spine
+      assert("Exchange SinglePartition".r.findAllIn(plan(got)).size === 1,
+        name)
+      assert(plan(old).contains("rangepartitioning"), name)
+      val (now, before) = (csv(got, s"$name.csv"), csv(old, s"$name.old.csv"))
+      assert(now.head === before.head, name)
+      assert(now.tail.sorted === before.tail.sorted, name)
+      // every fixture row has unique sort keys, so the order is total and
+      // the two files must agree line for line
+      assert(now === before, name)
+    }
   }
 
   test("HttpUploadSink posts multipart with token auth; fails on non-2xx") {

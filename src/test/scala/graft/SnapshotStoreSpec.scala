@@ -516,6 +516,50 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(SnapshotStore.read(spark, root).count() === 3)
   }
 
+  test("a row group mixing NaN with real doubles keeps its file " +
+    "visible: readWhere equals the unpruned read plus the filter") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val root = freshRoot()
+    // a clean file whose range spans every probe, so pruning the other
+    // file never leaves the scan empty
+    SnapshotStore.append(spark.range(100000, 100002).select(col("id"),
+      when(col("id") === 100000, -1.0).otherwise(1e6).as("x")), root)
+    // one file of ~8 KiB row groups: below 2000 the even ids are NaN, so
+    // each of those row groups mixes NaN with real values and parquet-mr
+    // withholds its bounds; the groups above carry clean ones
+    val mixed = spark.range(0, 4000).coalesce(1).select(col("id"),
+      when(col("id") < 2000 && col("id") % 2 === 0, Double.NaN)
+        .otherwise(col("id").cast("double")).as("x"))
+    spark.conf.set("parquet.block.size", "8192")
+    try SnapshotStore.append(mixed, root)
+    finally spark.conf.unset("parquet.block.size")
+    // the fixture really has withheld-bounds chunks next to clean ones
+    val chunks = Files.walk(Paths.get(root)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).flatMap { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toUri),
+          new org.apache.hadoop.conf.Configuration()))
+        try r.getFooter.getBlocks.asScala.map(b => b.getColumns.asScala
+          .find(_.getPath.toDotString == "x").get).toSeq
+        finally r.close()
+      }.toSeq
+    assert(chunks.exists(c => !c.getStatistics.hasNonNullValue &&
+      c.getStatistics.getNumNulls == 0))
+    assert(chunks.count(_.getStatistics.hasNonNullValue) > 1)
+    def ids(d: DataFrame): Seq[Long] =
+      d.select("id").collect().map(_.getLong(0)).toSeq.sorted
+    val all = SnapshotStore.read(spark, root)
+    Seq((1.0, 11.0), (999.0, 1001.0), (1500.0, 1700.0), (1990.0, 2010.0),
+      (2500.0, 2600.0), (-5.0, 0.5)).foreach { case (lo, hi) =>
+      val want = ids(all.where(col("x") >= lo && col("x") <= hi))
+      assert(want.nonEmpty, s"[$lo, $hi]")
+      assert(ids(SnapshotStore.readWhere(spark, root, "x", lo, hi)) === want,
+        s"[$lo, $hi]")
+    }
+  }
+
   test("deleteWhere removes the range atomically, keeps NULL rows, " +
     "prunes untouched groups, and no-ops when nothing can match") {
     import spark.implicits._
